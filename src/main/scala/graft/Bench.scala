@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 object Bench {
 
@@ -63,23 +62,24 @@ object Bench {
     s"""{"unit":"ms","sf":"$sfName","passes":2,"queries":$qs}"""
   }
 
+  /** Where the full per-query map goes. `SPARK_GRAFT_BENCH_FULL`
+    * (`fullOverride`) names one file. Otherwise a full sweep writes
+    * BENCH_QUERIES.json and BENCH_QUERIES_c<cpus>.json: the driver
+    * benches at two core counts and the second run overwrites
+    * BENCH_QUERIES.json, so the suffixed copy keeps each count's map.
+    * A focused (`SPARK_GRAFT_ONLY`) sweep writes neither, so a partial
+    * map never replaces the committed full one. */
+  def artifactPaths(fullOverride: Option[String], focused: Boolean,
+      cpus: Int): Seq[String] = fullOverride match {
+    case Some(path) => Seq(path)
+    case None if focused => Nil
+    case None => Seq("BENCH_QUERIES.json", s"BENCH_QUERIES_c$cpus.json")
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Optional comma-separated allowlist for focused iteration on a few
-    // queries; absent (the driver's invocation) = run everything.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val queries = only.fold(SparkEntry.queries)(names =>
-      SparkEntry.queries.filter { case (k, _) => names(k) })
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val queries = Graft.selectedQueries
+    val spark = Graft.session()
     // ERROR-only logs: the bench's published surface is one JSON line,
     // and the driver's 2000-byte tail capture must hold it — WARN
     // noise (localCheckpoint reliability notes, AQE chatter) was
@@ -99,27 +99,16 @@ object Bench {
     // Untimed warmup: one full pass builds file indexes and lets the JIT
     // compile every query's generated code, so timed numbers reflect
     // steady state rather than which query happened to run first cold.
-    queries.foreach { case (_, fn) =>
-      try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-      catch { case _: Throwable => () }
+    queries.foreach { case (name, fn) =>
+      Graft.attempt("warmup", name)(Graft.noop(fn(spark, sfDir)))
     }
-    // noop sink: forces FULL evaluation of every output column (a bare
-    // count() would let Catalyst prune projection-only work to nothing).
     // Failures record -1 so the output distinguishes a broken query from
     // a fast one.
     def timedSweep(): Seq[(String, Double)] = queries.toSeq.map {
       case (name, fn) =>
         val t0 = System.nanoTime()
-        val elapsed =
-          try {
-            fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-            (System.nanoTime() - t0) / 1e9
-          } catch {
-            case e: Throwable =>
-              System.err.println(s"[bench] $name failed: ${e.getMessage}")
-              -1.0
-          }
-        name -> elapsed
+        val ok = Graft.attempt("bench", name)(Graft.noop(fn(spark, sfDir)))
+        name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
     }
     // TWO full timed sweeps (not back-to-back per query): a transient
     // co-load spike at any moment lands in pass 1 of some queries and
@@ -133,19 +122,8 @@ object Bench {
     val results = passes.map { case (name, ps) => name -> minOfPasses(ps) }
     // basename only ("sf0.1"), not the full path
     val sfName = sfDir.split('/').filter(_.nonEmpty).lastOption.getOrElse(sfDir)
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL",
-      "BENCH_QUERIES.json")
-    // The default artifact ALSO lands in a core-count-suffixed file
-    // (r22): the driver benches at two core counts and the second run
-    // overwrites BENCH_QUERIES.json, so the 32-core per-query map never
-    // survived a round and the driver's per-query/scaling comparisons
-    // came up empty (PERF_r21 n_common: 0). Purely an additional output
-    // — the stdout line, the timing methodology, and the default file
-    // are byte-identical to before.
-    val outPaths = outPath +:
-      (if (outPath == "BENCH_QUERIES.json")
-        Seq(s"BENCH_QUERIES_c$cpus.json") else Nil)
-    outPaths.foreach { path =>
+    artifactPaths(sys.env.get("SPARK_GRAFT_BENCH_FULL"), Graft.only.nonEmpty,
+        Graft.cpus).foreach { path =>
       try {
         java.nio.file.Files.write(java.nio.file.Paths.get(path),
           (fullMapJson(passes, sfName) + "\n")
@@ -156,7 +134,6 @@ object Bench {
       }
     }
     println(renderLine(results, sfName))
-    graft.operators.Similarity.clearSharedGraphs(spark)
-    spark.stop()
+    Graft.stop(spark)
   }
 }

@@ -12,7 +12,7 @@ object Explain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val spark = Graft.session("graft-explain")
+    val spark = Graft.session()
     names.foreach { name =>
       SparkEntry.queries.get(name) match {
         case Some(fn) =>
@@ -25,6 +25,6 @@ object Explain {
         case None => println(s"\n========== $name: UNKNOWN ==========")
       }
     }
-    spark.stop()
+    Graft.stop(spark)
   }
 }

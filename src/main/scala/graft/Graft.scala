@@ -1,8 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Session factory with scale-oriented defaults.
+/** The single session factory, plus the query-run helpers every entry
+  * point shares. Bench, Verify, JobProbe and Explain, the test suite
+  * (`SparkSpec`) and perfbench all build their session here, so the
+  * config that is tested is the config that is benched and shipped.
   *
   * The engine is designed for a multi-executor cluster reading ~100 TB; these
   * defaults are the local[N] test-rig equivalents of that posture:
@@ -14,17 +17,24 @@ import org.apache.spark.sql.SparkSession
   *     `LocalDateTime.now()`, /root/reference Main.java:105 — pinning UTC
   *     makes TimestampType coincide with it IFF the reference host also runs
   *     in UTC; for other host zones the partition labels differ by the zone
-  *     offset. Correctness tests must not rely on cross-zone equality.).
+  *     offset. Correctness tests must not rely on cross-zone equality.),
+  *   - the native SQL functions (`graft_dot`, `graft_shingles`, ...)
+  *     registered through [[graft.functions.GraftExtensions]].
   */
 object Graft {
+
+  /** Cores the mains size themselves to: `SPARK_GRAFT_CPUS`, else every
+    * processor the JVM sees. */
+  lazy val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
   def session(
-      appName: String = "graft",
-      master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
-      shufflePartitions: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+      master: String = s"local[$cpus]",
+      shufflePartitions: Int = cpus
   ): SparkSession = {
     val spark = SparkSession
       .builder()
-      .appName(appName)
+      .appName("graft")
       .master(master)
       .withExtensions(new graft.functions.GraftExtensions)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
@@ -37,5 +47,39 @@ object Graft {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
+  }
+
+  /** `SPARK_GRAFT_ONLY`: an optional comma-separated allowlist for
+    * focused iteration on a few queries. Absent (the driver's
+    * invocation) means the whole ledger. */
+  lazy val only: Option[Set[String]] = sys.env.get("SPARK_GRAFT_ONLY")
+    .map(_.split(",").map(_.trim).toSet)
+
+  /** The ledger queries Bench and Verify run. */
+  def selectedQueries: Map[String, (SparkSession, String) => DataFrame] =
+    only.fold(SparkEntry.queries)(names =>
+      SparkEntry.queries.filter { case (k, _) => names(k) })
+
+  /** Full evaluation through the noop sink: every output column is
+    * computed, where a bare count() would let Catalyst prune
+    * projection-only work to nothing. */
+  def noop(df: DataFrame): Unit =
+    df.write.mode("overwrite").format("noop").save()
+
+  /** Runs `action` for query `name` and reports whether it succeeded. A
+    * failure prints `[tag] name failed: message` to stderr, so one
+    * broken query never stops a sweep. */
+  def attempt(tag: String, name: String)(action: => Unit): Boolean =
+    try { action; true }
+    catch {
+      case e: Throwable =>
+        System.err.println(s"[$tag] $name failed: ${e.getMessage}")
+        false
+    }
+
+  /** Drops the session-shared kNN graphs, then stops the session. */
+  def stop(spark: SparkSession): Unit = {
+    graft.operators.Similarity.clearSharedGraphs(spark)
+    spark.stop()
   }
 }

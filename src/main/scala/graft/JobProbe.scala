@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Scheduling-overhead profiler: runs selected queries with a
   * SparkListener attached and prints, per query, wall-clock beside the
@@ -12,7 +11,7 @@ import org.apache.spark.sql.SparkSession
   * summed task time is paying driver-side scheduling, not compute.
   *
   * Usage: runMain graft.JobProbe [sfDir] [query ...]   (all by default)
-  * Env: SPARK_GRAFT_CPUS (default 4).
+  * Env: SPARK_GRAFT_CPUS (default: every available processor).
   */
 object JobProbe {
 
@@ -31,15 +30,7 @@ object JobProbe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 1) args.drop(1).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session()
     spark.sparkContext.setLogLevel("ERROR")
     val c = new Counts
     val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
@@ -65,20 +56,11 @@ object JobProbe {
       SparkEntry.queries.get(name) match {
         case Some(fn) =>
           // untimed warmup: file indexes + JIT, the Bench discipline
-          try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-          catch { case _: Throwable => () }
+          Graft.attempt("warmup", name)(Graft.noop(fn(spark, sfDir)))
           Thread.sleep(300) // let the async listener bus drain
           val before = c.snapshot
           val t0 = System.nanoTime()
-          val ok =
-            try {
-              fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-              true
-            } catch {
-              case e: Throwable =>
-                System.err.println(s"[probe] $name failed: ${e.getMessage}")
-                false
-            }
+          val ok = Graft.attempt("probe", name)(Graft.noop(fn(spark, sfDir)))
           val wallMs = (System.nanoTime() - t0) / 1000000L
           Thread.sleep(300) // let the async listener bus drain
           val after = c.snapshot
@@ -88,7 +70,6 @@ object JobProbe {
         case None => System.err.println(s"[probe] unknown query: $name")
       }
     }
-    graft.operators.Similarity.clearSharedGraphs(spark)
-    spark.stop()
+    Graft.stop(spark)
   }
 }

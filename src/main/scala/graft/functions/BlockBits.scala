@@ -1,10 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo,
-  Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression,
+  UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext,
   ExprCode}
 import org.apache.spark.sql.graft.ColumnBridge
@@ -117,24 +116,10 @@ object BlockBitsUtil {
   }
 }
 
-/** Column-API facade + SQL registration (same pattern as [[RollFns]]). */
+/** Column-API facade. */
 object BlockFns {
 
   /** `graft_blockbits(payload, nBlocks)` as a Column. */
   def blockBits(payload: Column, nBlocks: Int): Column =
     ColumnBridge.column(BlockBits(ColumnBridge.expression(payload), nBlocks))
-
-  private[functions] val blockInfo = (
-    FunctionIdentifier("graft_blockbits"),
-    new ExpressionInfo(classOf[BlockBits].getName, "graft_blockbits"),
-    (children: Seq[Expression]) => children match {
-      case Seq(payload, Literal(n: Int, _)) => BlockBits(payload, n)
-      case _ => throw new IllegalArgumentException(
-        "graft_blockbits(payload, n) requires a literal integer block count")
-    })
-
-  /** Register `graft_blockbits` for SQL texts on an existing session. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      blockInfo._1, blockInfo._2, blockInfo._3)
 }

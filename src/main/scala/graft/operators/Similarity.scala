@@ -2299,74 +2299,6 @@ object Similarity {
       .orderBy(col("query_id"), col("rank"))
   }
 
-  /** The residual tier AT REST — [[ivfPqResidualServe]] with the
-    * residual codes and cell assignment as a PRECOMPUTED
-    * cell-partitioned table ([[IndexStore]], the s19 stored-codes
-    * posture extended to the residual layout, r22 per the r21
-    * verdict's measurement directive): the table is written once per
-    * (corpus, hyperparameters) per session from the SAME deterministic
-    * artifacts the in-query trainer uses, and a serve invocation is
-    * purely probe-schedule → partition-pruned code scan → broadcast
-    * LUT join → ADC partial-agg top-k. No corpus float is touched and
-    * NO ENCODE PASS runs at serve time — that is the declared
-    * semantics change vs [[ivfPqResidualServe]] (which pays the
-    * residual encode per invocation), and exactly what a deployment
-    * pays at steady state: residual codes are columns beside the
-    * index, maintained at ingest (the s18 append argument applies
-    * per-vector to residual codes unchanged — the frozen coarse
-    * quantizer fixes each vector's cell and hence its residual).
-    * Results are identical to s30/[[ivfPqResidualServe]] by
-    * construction (same artifacts, same codes — parquet round-trips
-    * the integer code rows losslessly — same ADC arithmetic;
-    * spec-pinned row equality), so the one oracle pins all three
-    * forms. The probe schedule is [[probeCells]] rank-1 = the query's
-    * own assigned cell (the s15 `nProbe = 1` identity). */
-  def ivfPqResidualStoredServe(embeddings: DataFrame, m: Int = 4,
-      subDim: Int = 16, k: Int = 8, nQueries: Int = 5,
-      topK: Int = 10): DataFrame = {
-    val centroids = Clustering.cachedCentroids(embeddings)
-    val vectors = embeddings
-      .select(col("vec_id"), col("embedding").as("emb"))
-      .withColumn("vnorm2",
-        graft.functions.VectorOps.dot(col("emb"), col("emb")))
-    val resid = Clustering.assign(vectors, centroids)
-      .join(broadcast(centroids.select(col("cluster_id"), col("cemb"))),
-        "cluster_id")
-      .select(col("vec_id"), col("cluster_id").as("cell"),
-        expr("""zip_with(emb, cemb, (x, c) ->
-          CAST(CAST(x AS DOUBLE) - CAST(c AS DOUBLE) AS FLOAT))""")
-          .as("embedding"))
-    val resFrame = resid.select(col("vec_id"), col("embedding"))
-    val codebook = ModelArtifacts.cached("residual-pq-codebook",
-      embeddings, s"m=$m,subDim=$subDim,k=$k")(
-      pqCodebookLocal(resFrame, m, subDim, k))
-    val stored = IndexStore.storedTable("residual-codes", embeddings,
-        s"m=$m,subDim=$subDim,k=$k,K=$CoarseK", Seq("cell")) {
-      resid.select(col("vec_id"), col("cell"))
-        .join(pqAssign(pqSubvectors(resFrame, m, subDim), codebook)
-          .select(col("vec_id"), col("sub"), col("code")), "vec_id")
-    }
-    val lut = pqLut(embeddings, codebook, m, subDim, nQueries)
-    val queries = vectors.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("emb").as("query_emb"),
-        col("vnorm2").as("qnorm2"))
-    val probes = probeCells(queries, centroids, 1)
-      .select(col("query_id"), col("cell"))
-    val probedIds = probes.select(col("cell")).distinct()
-      .collect().map(_.getLong(0)).sorted.toSeq
-    val scored = stored
-      .filter(col("cell").isin(probedIds: _*))
-      .join(broadcast(lut), Seq("sub", "code"))
-      .join(broadcast(probes), Seq("query_id", "cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .groupBy(col("query_id"), col("cell"), col("vec_id"))
-      .agg(sum(col("pdot_fp")).as("adc_fp"))
-    topKByQuery(scored, "adc_fp", topK, keys = Seq("query_id", "cell"))
-      .select(col("query_id"), col("cell"), col("neighbor_id"),
-        col("adc_fp").cast("long").as("adc_fp"), col("rank"))
-      .orderBy(col("query_id"), col("rank"))
-  }
-
   /** The OPQ-lite dimension permutation: dims ranked by corpus
     * variance (exact integer-micro sums; the score n·Σx²−(Σx)² is
     * two IEEE products and a subtract — identical trees both
@@ -2719,13 +2651,6 @@ object Similarity {
     // s12/s30 by construction (the s15 oracle/spec contract and
     // the SimilaritySpec serve-equality tests), so the eval pays
     // encode+probe, never the coarse/PQ/residual training lineages.
-    // The stored-residual-codes form ([[ivfPqResidualStoredServe]])
-    // was prototyped and measured (r22, the r21 verdict's item 6
-    // pass): bench-NEUTRAL at sf0.1 (1.14x vs an untouched-control
-    // band of 1.11-1.17x — the encode it removes is cheap beside the
-    // probe/ADC work here), so the encode-included serve stays the
-    // declared residual tier; the at-rest form remains available,
-    // spec-pinned row-equal.
     val approx = ivfPqTopKServe(embeddings, nQueries = nQueries,
         topK = k)
       .select(lit("ivfpq_raw").as("tier"), col("query_id"),

@@ -1504,26 +1504,46 @@ object TextAnalysis {
       col("bullet_lines").cast("double") / col("n_lines").cast("double")
     val ellipsisFrac =
       col("ellipsis_lines").cast("double") / col("n_lines").cast("double")
-    val rWordCount = col("n_words") >= 50L && col("n_words") <= 100000L
-    val rWordLen = meanWordLen >= 3.0 && meanWordLen <= 10.0
-    val rSymbol = symbolRatio <= 0.1
-    val rBullet = bulletFrac <= 0.9
-    val rEllipsis = ellipsisFrac <= 0.3
-    val rAlpha = alphaFrac >= 0.8
-    val rStop = col("n_required_stops") >= 2L
+    val rules = gopherVerdicts(col("n_words"), meanWordLen, symbolRatio,
+      bulletFrac, ellipsisFrac, alphaFrac, col("n_required_stops"))
+    val ruleCols = rules.map { case (name, rule) => rule.as(name) } :+
+      gopherKeep(rules).as("keep")
     wordAgg.join(lineAgg, "doc_id")
-      .select(col("doc_id"), col("n_lines"), col("n_words"),
+      .select(Seq(col("doc_id"), col("n_lines"), col("n_words"),
         meanWordLen.as("mean_word_len"), alphaFrac.as("alpha_frac"),
         symbolRatio.as("symbol_ratio"), bulletFrac.as("bullet_frac"),
-        ellipsisFrac.as("ellipsis_frac"), col("n_required_stops"),
-        rWordCount.as("r_word_count"), rWordLen.as("r_word_len"),
-        rSymbol.as("r_symbol"), rBullet.as("r_bullet"),
-        rEllipsis.as("r_ellipsis"), rAlpha.as("r_alpha"),
-        rStop.as("r_stop"),
-        (rWordCount && rWordLen && rSymbol && rBullet && rEllipsis &&
-          rAlpha && rStop).as("keep"))
+        ellipsisFrac.as("ellipsis_frac"), col("n_required_stops")) ++
+        ruleCols: _*)
       .orderBy(col("doc_id"))
   }
+
+  /** The seven Gopher thresholds, defined once for every form that
+    * applies them: t35's [[gopherRules]] columns, p08's fused
+    * [[gateMetrics]] and the streaming [[gopherKeepExpr]]. Takes the
+    * rule metrics; returns each rule's verdict under its t35 column
+    * name, in column order. A doc is kept iff all seven hold. */
+  private def gopherVerdicts(nWords: Column, meanWordLen: Column,
+      symbolRatio: Column, bulletFrac: Column, ellipsisFrac: Column,
+      alphaFrac: Column, nStops: Column): Seq[(String, Column)] = Seq(
+    "r_word_count" -> (nWords >= 50L && nWords <= 100000L),
+    "r_word_len" -> (meanWordLen >= 3.0 && meanWordLen <= 10.0),
+    "r_symbol" -> (symbolRatio <= 0.1),
+    "r_bullet" -> (bulletFrac <= 0.9),
+    "r_ellipsis" -> (ellipsisFrac <= 0.3),
+    "r_alpha" -> (alphaFrac >= 0.8),
+    "r_stop" -> (nStops >= 2L))
+
+  private def gopherKeep(rules: Seq[(String, Column)]): Column =
+    rules.map(_._2).reduce(_ && _)
+
+  /** C4's line-keep predicate over a rendered `line` column: terminal
+    * period, ≥ 4 words, no curly brace, no "lorem ipsum". Shared by
+    * t36's [[c4LineFilter]] and p08's fused [[gateMetrics]]. */
+  private def c4KeepLine: Column =
+    expr("right(line, 1)") === "." &&
+      size(split(col("line"), " ")) >= 4 &&
+      !col("line").contains("{") &&
+      !col("line").contains("lorem ipsum")
 
   /** t36: C4-style line-level cleaning (Raffel et al. 2020, §2.2) over
     * the rendered page — a line survives iff it ends in terminal
@@ -1543,11 +1563,7 @@ object TextAnalysis {
     * d-tier op relies on). */
   def c4LineFilter(documents: DataFrame): DataFrame = {
     val lines = syntheticLines(documents)
-    val keepL = expr("right(line, 1)") === "." &&
-      size(split(col("line"), " ")) >= 4 &&
-      !col("line").contains("{") &&
-      !col("line").contains("lorem ipsum")
-    lines.withColumn("keepl", keepL)
+    lines.withColumn("keepl", c4KeepLine)
       .groupBy(col("doc_id")).agg(
         count(lit(1)).as("n_lines"),
         sum(when(col("keepl"), 1L).otherwise(0L)).as("n_kept"),
@@ -2300,10 +2316,8 @@ object TextAnalysis {
       (hashMarks + ellMarks).cast("double") / nWords.cast("double")
     val bulletFrac = bullets.cast("double") / nLines.cast("double")
     val ellipsisFrac = ellLines.cast("double") / nLines.cast("double")
-    (nWords >= 50L && nWords <= 100000L) &&
-      (meanWordLen >= 3.0 && meanWordLen <= 10.0) &&
-      (symbolRatio <= 0.1) && (bulletFrac <= 0.9) &&
-      (ellipsisFrac <= 0.3) && (alphaFrac >= 0.8) && (nStops >= 2L)
+    gopherKeep(gopherVerdicts(nWords, meanWordLen, symbolRatio,
+      bulletFrac, ellipsisFrac, alphaFrac, nStops))
   }
 
   /** t39: GLOBAL line-level deduplication (C4's "discard any
@@ -2481,18 +2495,16 @@ object TextAnalysis {
     *  - the distinct-required-stopword count is the size of the
     *    deduplicated union of per-line stop intersections — order-free
     *    under collect_list's partition nondeterminism;
-    *  - c4's keep predicate, kept-line reassembly (sort_array over
-    *    (line_no, line) structs) and cleaned length are verbatim.
+    *  - c4's keep predicate ([[c4KeepLine]]) and the gopher
+    *    thresholds ([[gopherVerdicts]]) are the shared definitions;
+    *    kept-line reassembly (sort_array over (line_no, line) structs)
+    *    and cleaned length are verbatim.
     * Pinned equal to the joined public frames in QualityFilterSpec. */
   private[operators] def gateMetrics(documents: DataFrame): DataFrame = {
     val stopsArr = array(GopherStops.map(lit): _*)
-    val keepL = expr("right(line, 1)") === "." &&
-      size(split(col("line"), " ")) >= 4 &&
-      !col("line").contains("{") &&
-      !col("line").contains("lorem ipsum")
     val agg = syntheticLines(documents)
       .withColumn("wn", size(split(col("line"), " ")).cast("long"))
-      .withColumn("keepl", keepL)
+      .withColumn("keepl", c4KeepLine)
       .groupBy(col("doc_id")).agg(
         count(lit(1)).as("n_lines"),
         sum(when(expr("left(line, 2)") === "- ", 1L).otherwise(0L))
@@ -2515,21 +2527,13 @@ object TextAnalysis {
         sort_array(collect_list(
           when(col("keepl"), struct(col("line_no"), col("line")))))
           .as("kept"))
-    val meanWordLen =
-      col("sum_word_chars").cast("double") / col("n_words").cast("double")
-    val symbolRatio = (col("hash_marks") + col("ellipsis_marks"))
-      .cast("double") / col("n_words").cast("double")
-    val keep =
-      (col("n_words") >= 50L && col("n_words") <= 100000L) &&
-      (meanWordLen >= 3.0 && meanWordLen <= 10.0) &&
-      symbolRatio <= 0.1 &&
-      (col("bullet_lines").cast("double") /
-        col("n_lines").cast("double")) <= 0.9 &&
-      (col("ellipsis_lines").cast("double") /
-        col("n_lines").cast("double")) <= 0.3 &&
-      (col("alpha_words").cast("double") /
-        col("n_words").cast("double")) >= 0.8 &&
-      col("n_required_stops") >= 2L
+    def perWord(c: Column) = c.cast("double") / col("n_words").cast("double")
+    def perLine(c: Column) = c.cast("double") / col("n_lines").cast("double")
+    val keep = gopherKeep(gopherVerdicts(col("n_words"),
+      perWord(col("sum_word_chars")),
+      perWord(col("hash_marks") + col("ellipsis_marks")),
+      perLine(col("bullet_lines")), perLine(col("ellipsis_lines")),
+      perWord(col("alpha_words")), col("n_required_stops")))
     agg.select(col("doc_id"), keep.as("gopher_keep"), col("n_kept"),
       length(array_join(transform(col("kept"), x => x.getField("line")),
         "\n")).cast("long").as("n_clean_chars"))

@@ -55,6 +55,18 @@ class EntrySpec extends SparkSpec {
     assert(Bench.minOfPasses(Seq(-1.0, -1.0)) == -1.0)
   }
 
+  test("focused bench runs leave the committed per-query maps alone") {
+    // A SPARK_GRAFT_ONLY sweep times a few queries; writing its partial
+    // map over BENCH_QUERIES*.json would lose the full sweep the
+    // round-over-round comparison reads. An explicit
+    // SPARK_GRAFT_BENCH_FULL target is still honoured.
+    assert(Bench.artifactPaths(None, focused = false, cpus = 8) ==
+      Seq("BENCH_QUERIES.json", "BENCH_QUERIES_c8.json"))
+    assert(Bench.artifactPaths(None, focused = true, cpus = 8).isEmpty)
+    assert(Bench.artifactPaths(Some("x.json"), focused = true, cpus = 8) ==
+      Seq("x.json"))
+  }
+
   test("bench line total is locale-proof JSON") {
     // renderLine is the sole line the driver parses; under a comma-decimal
     // default locale an f"%.3f" would emit "value":1,500 — invalid JSON.

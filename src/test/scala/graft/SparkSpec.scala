@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local-session fixture: one small session per suite. */
+/** Shared local-session fixture: one small [[Graft.session]] for every
+  * suite. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.shared
 
@@ -19,16 +20,7 @@ object SparkSpec {
     * future parallel-execution switch from flaking them). */
   val localeLock: Object = new Object
 
-  lazy val shared: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** The shipped session, at a small fixed width. */
+  lazy val shared: SparkSession =
+    Graft.session(master = "local[4]", shufflePartitions = 4)
 }

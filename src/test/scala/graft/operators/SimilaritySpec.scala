@@ -672,11 +672,6 @@ class SignLshSpec extends graft.SparkSpec {
     val served = rows(Similarity.ivfPqResidualServe(emb))
     assert(trained.nonEmpty)
     assert(served == trained)
-    // r22: the stored-residual-codes form (what s31's residual tier
-    // now rides) is row-equal to both — same artifacts, same codes
-    // through the parquet round-trip, same ADC arithmetic
-    val stored = rows(Similarity.ivfPqResidualStoredServe(emb))
-    assert(stored == trained)
   }
 
   test("OPQ/rotated serving forms equal the in-query-training forms " +
@@ -1009,9 +1004,9 @@ class RangeSearchSpec extends graft.SparkSpec {
           .as("r"))
       .collect().map(r => r.getLong(0) -> (r.get(1) == null)).toMap
     assert(out == Map(1L -> false, 2L -> true, 3L -> true))
-    // SQL registration rejects malformed calls with a named error, not
-    // a raw IndexOutOfBounds/ClassCast from the function registry.
-    graft.functions.HadamardFns.register(spark)
+    // The session's SQL registration rejects malformed calls with a
+    // named error, not a raw IndexOutOfBounds/ClassCast from the
+    // function registry.
     val e = intercept[Exception] {
       spark.sql("SELECT graft_hadamard(array(1.0f, 2.0f))").collect()
     }
